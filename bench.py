@@ -394,7 +394,9 @@ def main() -> None:
     # index-vs-doc qp route) on the other side of their cutoffs. The
     # store build is fingerprint-cached, so the per-run cost is queries
     # only. Set CMW_BENCH_SF1=0 to skip.
-    sf1_dir = os.environ.get("CMW_BENCH_SF1_DIR", "/root/repo/.sfgen/sf1")
+    sf1_dir = os.environ.get(
+        "CMW_BENCH_SF1_DIR", os.path.join(os.path.dirname(os.path.abspath(__file__)), ".sfgen", "sf1")
+    )
     if os.environ.get("CMW_BENCH_SF1", "1") != "0" and os.path.isdir(sf1_dir):
         t0 = time.time()
         materialize(spark, sf1_dir)

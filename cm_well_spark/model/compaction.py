@@ -52,24 +52,18 @@ from cm_well_spark.model.lakehouse import (
     merge_predicate_stats,
     triples_of,
 )
+from cm_well_spark.plans import keyset
 
 _INF_DELTA = "infotons_delta"
 _TRI_DELTA = "triples_delta"
 
-# above this many distinct paths the isin literal stops being a sane
-# pushdown predicate — and a forced broadcast of the affected-path set
-# stops being safe (a backfill batch touching millions of paths would
-# OOM the executors exactly like an unbounded broadcast dim). Both the
-# write-side isin route and the read-side reconcile broadcasts use the
-# same counted gate; above it we hand AQE a plain join.
-_ISIN_PUSHDOWN_CAP = 100_000
-
-
-def _gated_broadcast(affected: DataFrame, n_affected: int) -> DataFrame:
-    """Broadcast the affected-path set only when it is provably bounded;
-    otherwise return it un-hinted and let AQE pick the join strategy
-    (sort-merge / shuffled-hash for a backfill-sized set)."""
-    return F.broadcast(affected) if n_affected <= _ISIN_PUSHDOWN_CAP else affected
+# Largest key set the driver envelopes or bisects as literals: the
+# write_batch base read (one between() envelope + In behind it, a
+# different curve from plans/keyset.LITERAL_MAX's three-site merge plan)
+# and the file-surgery preconditions (affected paths / (p, o) pairs
+# bisected against per-file footer ranges). Above it write_batch takes
+# the keyset join route and surgery falls back to the full compact.
+_SURGERY_CAP = 100_000
 
 
 def _delta_batches(out: str, name: str) -> list[str]:
@@ -85,37 +79,30 @@ def _read_base_infotons(spark: SparkSession, out: str) -> DataFrame:
     return spark.read.parquet(os.path.join(out, "infotons"))
 
 
+def _reconcile(spark: SparkSession, out: str, batches: list[str]):
+    """(merge-on-read doc table, delta-affected path set, its proven
+    size). The affected set is checkpointed and counted once (keyset
+    proof); a normal-cadence batch broadcasts, a millions-of-paths
+    backfill falls through to AQE."""
+    base = _read_base_infotons(spark, out)
+    deltas = spark.read.parquet(*batches).select(*base.columns)
+    affected, n = keyset.proven(deltas.select("path").distinct())
+    untouched = keyset.drop(base, "path", affected, n)
+    touched = keyset.keep(base, "path", affected, n).unionByName(deltas)
+    w = Window.partitionBy("path").orderBy(F.desc("index_time"))
+    touched = touched.withColumn("current", F.row_number().over(w) == 1)
+    return untouched.unionByName(touched), affected, n
+
+
 def reconciled_infotons(spark: SparkSession, out: str) -> DataFrame:
     """Merge-on-read doc table: base + all delta batches, `current`
     recomputed per path for delta-affected paths only (window over the
     affected slice; broadcast anti-join passes the untouched bulk
     through with zero shuffle)."""
-    base = _read_base_infotons(spark, out)
     batches = _delta_batches(out, _INF_DELTA)
     if not batches:
-        return base
-    deltas = spark.read.parquet(*batches).select(*base.columns)
-    affected = deltas.select(F.col("path").alias("__ap")).distinct()
-    # counted gate: the count is an O(delta) action; a normal-cadence
-    # batch broadcasts, a millions-of-paths backfill falls through to AQE
-    n_affected = affected.count()
-    untouched = base.alias("__b").join(
-        _gated_broadcast(affected.alias("__a"), n_affected),
-        F.col("__b.path") == F.col("__a.__ap"),
-        "left_anti",
-    )
-    touched = (
-        base.alias("__b2")
-        .join(
-            _gated_broadcast(affected.alias("__a2"), n_affected),
-            F.col("__b2.path") == F.col("__a2.__ap"),
-            "left_semi",
-        )
-        .unionByName(deltas)
-    )
-    w = Window.partitionBy("path").orderBy(F.desc("index_time"))
-    touched = touched.withColumn("current", F.row_number().over(w) == 1)
-    return untouched.unionByName(touched)
+        return _read_base_infotons(spark, out)
+    return _reconcile(spark, out, batches)[0]
 
 
 def reconciled_triples(spark: SparkSession, out: str) -> DataFrame:
@@ -127,20 +114,9 @@ def reconciled_triples(spark: SparkSession, out: str) -> DataFrame:
     batches = _delta_batches(out, _INF_DELTA)
     if not batches:
         return base
-    deltas = spark.read.parquet(*batches)
-    affected = deltas.select(F.col("path").alias("__ap")).distinct()
-    n_affected = affected.count()
-    untouched = base.alias("__t").join(
-        _gated_broadcast(affected.alias("__a"), n_affected),
-        F.col("__t.s") == F.col("__a.__ap"),
-        "left_anti",
-    )
-    inf = reconciled_infotons(spark, out)
-    touched_docs = inf.alias("__i").join(
-        _gated_broadcast(affected.alias("__a2"), n_affected),
-        F.col("__i.path") == F.col("__a2.__ap"),
-        "left_semi",
-    )
+    inf, affected, n = _reconcile(spark, out, batches)
+    untouched = keyset.drop(base, "s", affected, n)
+    touched_docs = keyset.keep(inf, "path", affected, n)
     return untouched.unionByName(triples_of(touched_docs).select(*base.columns))
 
 
@@ -188,20 +164,15 @@ def write_batch(spark: SparkSession, out: str, commands: DataFrame) -> int:
     base_max = _read_watermark(out)
     if base_max is None:
         base_max = inf.agg(F.max("index_time").alias("m")).first()["m"] or 0
-    batch_paths = [r["p"] for r in commands.select(F.col("path").alias("p")).distinct().collect()]
-    base = inf
-    if batch_paths and len(batch_paths) <= _ISIN_PUSHDOWN_CAP:
-        # The between() envelope is the sargable half: parquet pushes
-        # min/max range filters at ANY batch size, while an IN list
-        # beyond spark.sql.parquet.pushdown.inFilterThreshold (~10)
-        # silently stops pushing — measured 45s vs 5s per batch on the
-        # compacted sf1 store. Envelope prunes row groups; the exact
-        # isin then filters the residue rows.
-        base = inf.where(
-            F.col("path").between(min(batch_paths), max(batch_paths))
-            & F.col("path").isin(batch_paths)
-        )
-    versions = merge_versions(base, commands)
+    # Literal keys up to _SURGERY_CAP (the probe never collects more
+    # than cap+1 paths): keyset.keep's between() envelope is the sargable
+    # half — parquet pushes min/max range filters at ANY batch size,
+    # while an IN list beyond spark.sql.parquet.pushdown.inFilterThreshold
+    # silently stops pushing (measured 45s vs 5s per batch on the
+    # compacted sf1 store). Envelope prunes row groups; the exact isin
+    # then filters the residue rows.
+    keys, n_keys = keyset.probe(commands, "path", cap=_SURGERY_CAP)
+    versions = merge_versions(inf, commands, keys, n_keys)
     new_rows = decorate_versions(versions, base_max + 1)
     # writer's best-known `current`: the last version per path IN THIS
     # BATCH (an O(batch) window). Read-side reconciliation recomputes it
@@ -457,20 +428,6 @@ def _intervals(entries: list[tuple[str, str, str]], affected: set[str], next_bid
     return rows, next_bid, file_bid
 
 
-def _assign_buckets(df: DataFrame, key: str, interval_rows, spark: SparkSession) -> DataFrame:
-    """Tag each row with its interval bucket id via a broadcast range
-    join (BroadcastNestedLoopJoin, bounded: |rewritten slice| x
-    |intervals|, and the interval relation is file-count sized — the
-    bounded-dim broadcast the plan audit whitelists)."""
-    iv = spark.createDataFrame(
-        [(b, s, e) for b, s, e in interval_rows], "__bid INT, __lo STRING, __hi STRING"
-    )
-    cond = (F.col(key) >= F.col("__lo")) & (
-        F.col("__hi").isNull() | (F.col(key) < F.col("__hi"))
-    )
-    return df.join(F.broadcast(iv), cond).drop("__lo", "__hi")
-
-
 def _write_buckets(
     df: DataFrame, part_col: str | None, tmp: str, target_rows_per_file: int, sort_keys: list[str]
 ) -> None:
@@ -713,7 +670,7 @@ def compact_incremental(
     disjoint-range invariant this surgery preserves only holds on a
     compaction-produced layout, and every file must carry footer stats),
     per-subdir ranges actually disjoint, the affected path / (p, o) sets
-    bounded by _ISIN_PUSHDOWN_CAP, and the affected file fraction under
+    bounded by _SURGERY_CAP, and the affected file fraction under
     _INCR_MAX_AFFECTED_FRACTION.
 
     Disjointness is preserved by construction: the key space of each
@@ -744,10 +701,10 @@ def compact_incremental(
     # delta watermark NOW: deltas is lazy, and its files are gone by the
     # bookkeeping step at the end
     delta_max = deltas.agg(F.max("index_time").alias("m")).first()["m"]
-    path_rows = deltas.select("path").distinct().limit(_ISIN_PUSHDOWN_CAP + 1).collect()
-    if len(path_rows) > _ISIN_PUSHDOWN_CAP:
+    aff_paths = keyset.literals(deltas, "path", cap=_SURGERY_CAP)
+    if aff_paths is None:
         return None
-    aff_paths = sorted(r["path"] for r in path_rows)
+    aff_paths.sort()
     # kinds that only exist in the deltas need open intervals of their own
     delta_kinds = {r["kind"] for r in deltas.select("kind").distinct().collect()}
 
@@ -895,14 +852,12 @@ def _surgical_fold(
         aff_paths_df, F.col("path") == F.col("__ap"), "left_semi"
     )
     new_tri = triples_of(touched_docs).select(*tri_base.columns)
-    po_rows = (
-        new_tri.select("p", "o").distinct().limit(_ISIN_PUSHDOWN_CAP + 1).collect()
-    )
-    if len(po_rows) > _ISIN_PUSHDOWN_CAP:
+    po_rows = keyset.literals(new_tri, ["p", "o"], cap=_SURGERY_CAP)
+    if po_rows is None:
         return None
     new_po: dict[str, list[str]] = {}
-    for r in po_rows:
-        new_po.setdefault(r["p"], []).append(r["o"])
+    for p, o in po_rows:
+        new_po.setdefault(p, []).append(o)
     for v in new_po.values():
         v.sort()
 
@@ -1100,8 +1055,8 @@ def repair_paths(
         )
     if not paths:
         return {"mode": "repair", "repaired_paths": 0}
-    if len(paths) > _ISIN_PUSHDOWN_CAP:
-        raise ValueError(f"path set exceeds the {_ISIN_PUSHDOWN_CAP}-path surgery cap")
+    if len(paths) > _SURGERY_CAP:
+        raise ValueError(f"path set exceeds the {_SURGERY_CAP}-path surgery cap")
     aff_paths = sorted(set(paths))
 
     def rewrite(base_slice, aff_paths_df):

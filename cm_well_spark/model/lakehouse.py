@@ -28,7 +28,9 @@ from pyspark.sql import functions as F
 
 from cm_well_spark.model.builder import build_infotons
 
-DEFAULT_ROOT = os.environ.get("CMW_LAKEHOUSE", "/root/repo/.lakehouse")
+#: checkout root (the directory holding the cm_well_spark package)
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+DEFAULT_ROOT = os.environ.get("CMW_LAKEHOUSE", os.path.join(REPO_ROOT, ".lakehouse"))
 
 
 def _fingerprint(sf_dir: str) -> str:

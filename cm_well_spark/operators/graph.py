@@ -39,8 +39,9 @@ then on runs plain keyed joins/aggs Catalyst plans freely:
   - sampling: per hop ONE equi-join against the (frontier) node set and
     ONE row_number window partitioned by src — the window rides the
     join's hash partitioning. Frontier size is bounded by
-    |seeds| x prod(fanouts) by construction; no broadcast hints are
-    forced (AQE sizes the frontier join at runtime).
+    |seeds| x prod(fanouts) by construction; the frontier filter is a
+    plans/keyset.py route (literal pushdown, else a proof-gated
+    broadcast semi-join).
 
 None of this collects data-scale rows to the driver; the only driver
 loop is the fixed, user-bounded iteration/hop count.
@@ -53,6 +54,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from cm_well_spark.plans import keyset
 from cm_well_spark.plans.iterative import (
     RELIABLE_CHECKPOINTS,
     iter_checkpoint,
@@ -86,16 +88,6 @@ def _reliable_on(reliable: bool | None) -> bool:
 # The TPC-H-shaped reference fields of the test model (builder.py:12-19).
 # Callers on other corpora pass their own list; None = joker (every
 # reference-valued triple, the traversal `_edges` heuristic).
-# sampling frontiers at or under this size push into the scan as an
-# isin predicate (row-group skipping); larger ones semi-join. Bounded
-# driver memory: 10k short path strings.
-FRONTIER_ISIN_MAX = 10_000
-
-#: BFS frontier/visited relations carry an explicit broadcast hint below
-#: this row count (checkpointed LogicalRDDs have no stats, so AQE alone
-#: shuffles the data-scale edge side); above it, plain keyed joins.
-FRONTIER_BROADCAST_MAX = 2_000_000
-
 DEFAULT_LINK_FIELDS = (
     "ofOrder",
     "ofPart",
@@ -282,24 +274,19 @@ def sample_neighborhood(
     scan to the frontier's incident edges first and dedups only that
     bounded subset — at corpus scale a whole-graph edge distinct is a
     full shuffle spent on edges the sample never looks at. And because
-    the frontier is bounded by construction, each hop materializes it,
-    counts it, and when small pushes its paths INTO the scan as an
-    `isin` predicate (parquet row-group min/max skipping — the
-    traversal.py counted-checkpoint discipline) instead of semi-joining
-    against the full scan; larger frontiers fall back to the semi-join
-    and AQE plans it."""
+    the frontier is bounded by construction, each hop probes it
+    (plans/keyset.py): a small frontier pushes its paths INTO the scan as
+    a literal predicate (parquet row-group min/max skipping) instead of
+    semi-joining against the full scan; a larger one is counted and
+    semi-joined, broadcast under the keyset cap."""
     edges = reference_edges(triples, fields, dedup=False)
-    frontier = seeds.select(F.col(seeds.columns[0]).alias("src")).distinct()
+    frontier = seeds.select(F.col(seeds.columns[0]).alias("src"))
     hops: list[DataFrame] = []
     for h, fanout in enumerate(fanouts, start=1):
-        frontier, n_frontier = iter_checkpoint_count(frontier, reliable)
-        if n_frontier <= FRONTIER_ISIN_MAX:
-            paths = [r["src"] for r in frontier.collect()]
-            incident = edges.where(F.col("src").isin(paths))
-        else:
-            incident = edges.join(frontier, "src", "left_semi")
+        keys, n_keys = keyset.probe(frontier, "src", reliable=reliable)
         ranked = (
-            incident.distinct()
+            keyset.keep(edges, "src", keys, n_keys)
+            .distinct()
             .withColumn(
                 "__rn",
                 F.row_number().over(
@@ -313,12 +300,12 @@ def sample_neighborhood(
         )
         # lazy-checkpointed: each hop's sample is read twice (output
         # union + next frontier) — the blocks materialize inside the
-        # next hop's frontier-count job (or the caller's action for the
+        # next hop's frontier probe job (or the caller's action for the
         # last hop), then the output union reads blocks, never
         # re-deriving the edges-scan lineage
         ranked = iter_checkpoint_lazy(ranked, reliable)
         hops.append(ranked)
-        frontier = ranked.select(F.col("dst").alias("src")).distinct()
+        frontier = ranked.select(F.col("dst").alias("src"))
     out = hops[0]
     for nxt in hops[1:]:
         out = out.unionByName(nxt)
@@ -666,11 +653,11 @@ def bfs_distances(
     visited set. Both small relations carry COUNTED broadcast hints
     (their counts are already actions each round — checkpointed
     LogicalRDDs have no stats, so without the hint Spark shuffles the
-    full edge projection per hop; the counted-gate discipline from
-    compaction/_gated_broadcast applies: hint only below the cap,
-    fall back to a plain keyed join above it). Measured at sf1 (3-hop
-    walk, 39M-row symmetric projection, quiet box): ~28s this shape
-    (6s materialize + ~7s/hop map-side join); the rejected variants —
+    full edge projection per hop; plans/keyset.py hints only at or
+    under BROADCAST_MAX and falls back to a plain keyed join above
+    it). Measured at sf1 (3-hop walk, 39M-row symmetric projection,
+    quiet box): ~28s this shape (6s materialize + ~7s/hop map-side
+    join); the rejected variants —
     un-hinted joins shuffle the full projection per hop (~200s), and
     pushing the frontier in as an isin literal evaluates a
     thousands-wide predicate over every scanned row (~90s; scattered
@@ -702,20 +689,12 @@ def bfs_distances(
     frontier = visited.select("path")
     n_visited = n_frontier
     for d in range(1, max_depth + 1):
-        f = frontier.select(F.col("path").alias("src"))
-        if n_frontier <= FRONTIER_BROADCAST_MAX:
-            f = F.broadcast(f)
-        v = visited.select("path")
-        if n_visited <= FRONTIER_BROADCAST_MAX:
-            v = F.broadcast(v)
-        hop = edges.join(f, "src").select(F.col("dst").alias("path"))
+        hop = keyset.keep(edges, "src", frontier, n_frontier).select(F.col("dst").alias("path"))
         if not directed:
             hop = hop.unionAll(
-                edges.join(f, edges["dst"] == f["src"]).select(
-                    edges["src"].alias("path")
-                )
+                keyset.keep(edges, "dst", frontier, n_frontier).select(F.col("src").alias("path"))
             )
-        if n_visited <= FRONTIER_BROADCAST_MAX:
+        if keyset.broadcastable(n_visited):
             # anti BEFORE distinct (r12, guide §2.3): with a broadcast
             # visited set the anti join is map-side, so already-visited
             # candidates — the bulk of later hops' matches — drop before
@@ -725,9 +704,9 @@ def bfs_distances(
             # better). An unbroadcastable visited set keeps distinct
             # first: there the anti join shuffles too, and deduping
             # before that shuffle is what bounds its bytes.
-            nxt = hop.join(v, "path", "left_anti").distinct()
+            nxt = keyset.drop(hop, "path", visited, n_visited).distinct()
         else:
-            nxt = hop.distinct().join(v, "path", "left_anti")
+            nxt = keyset.drop(hop.distinct(), "path", visited, n_visited)
         nxt = nxt.select("path", F.lit(d).cast("long").alias("distance"))
         nxt, n_frontier = iter_checkpoint_count(nxt, reliable)
         if n_frontier == 0:
@@ -919,10 +898,10 @@ def personalized_pagerank(
     whose src has nonzero rank — the frontier (reached ∪ seeds; the
     teleport term re-injects seed mass every round). Each round filters
     the RAW pruned edge scan down to the frontier BEFORE the distinct
-    (literal isin pushdown under FRONTIER_ISIN_MAX for row-group
-    skipping, the sample_neighborhood discipline; counted-broadcast
-    semi-join above it, plain keyed semi-join past
-    FRONTIER_BROADCAST_MAX), so per-round work scales with the reach,
+    (a plans/keyset.py route: literal isin pushdown for row-group
+    skipping up to LITERAL_MAX, counted-broadcast semi-join above it,
+    plain keyed semi-join past BROADCAST_MAX — seed membership takes the
+    same route), so per-round work scales with the reach,
     not the corpus: out-degrees, contribution join and sum all run on
     the frontier-filtered relation. Nothing is persisted — the
     whole-graph edge/odeg materialization the old shape paid (and had
@@ -945,38 +924,32 @@ def personalized_pagerank(
     if not seeds:
         raise ValueError("personalized_pagerank needs a non-empty seed set")
     seed_list = sorted(set(seeds))
-    is_seed = F.col("path").isin(seed_list)
+    pairs = reference_edges(triples, fields, dedup=False)
+    seed_keys, n_seeds = keyset.from_values(pairs, "src", seed_list)
     # teleport mass is SPLIT across the seed set ((1-d)/|S| each, initial
     # mass 1/|S| each) so total rank mass stays 1 regardless of seed-set
     # size and scores are comparable across seed sets (ADVICE r9: the
     # unnormalized per-seed (1-d) convention made mass scale with |S|)
     share = 1.0 / len(seed_list)
-    reset = F.when(is_seed, F.lit((1.0 - damping) * share)).otherwise(F.lit(0.0))
+    reset = F.when(F.col("__seed"), F.lit((1.0 - damping) * share)).otherwise(F.lit(0.0))
     rank_expr = reset + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))
-    pairs = reference_edges(triples, fields, dedup=False)
-    frontier_lits: list[str] | None = list(seed_list)
-    frontier_df: DataFrame | None = None
-    n_frontier = len(seed_list)
+
+    def flag_seeds(df: DataFrame) -> DataFrame:
+        return keyset.mark(df, "path", seed_keys, "__seed", n_seeds)
+
+    keys, n_keys = seed_keys, n_seeds
     contribs: DataFrame | None = None
     for i in range(iterations):
-        if frontier_lits is not None:
-            fe = pairs.where(F.col("src").isin(frontier_lits))
-        else:
-            f = frontier_df
-            if n_frontier <= FRONTIER_BROADCAST_MAX:
-                f = F.broadcast(f)
-            fe = pairs.join(f, "src", "left_semi")
         # distinct AFTER the frontier filter: filter and distinct commute
         # on (src, dst), so this is the same per-src edge multiset (one
         # row each) the whole-graph distinct produced — at frontier cost
-        fe = fe.distinct()
+        fe = keyset.keep(pairs, "src", keys, n_keys).distinct()
         odeg = fe.groupBy("src").agg(F.count("*").alias("odeg"))
         if i == 0:
             cranks = odeg.select("src", (F.lit(share) / F.col("odeg")).alias("c"))
         else:
             cranks = (
-                odeg.withColumnRenamed("src", "path")
-                .join(contribs, "path", "left")
+                flag_seeds(odeg.withColumnRenamed("src", "path").join(contribs, "path", "left"))
                 .select(
                     F.col("path").alias("src"),
                     (rank_expr / F.col("odeg")).alias("c"),
@@ -989,42 +962,36 @@ def personalized_pagerank(
             .agg(F.sum("c").alias("contrib"))
         )
         if (i + 1) < iterations:
-            # the round's reach count rides its own materialization job
-            # (iter_checkpoint_count); the checkpoint also bounds plan
-            # depth, so no %8 depth guard is needed here
-            contribs, n_reached = iter_checkpoint_count(contribs, reliable)
-            n_frontier = n_reached + len(seed_list)
-            if n_frontier <= FRONTIER_ISIN_MAX:
-                # bounded driver collect (counted FIRST — the
-                # sample_neighborhood isin discipline): literal frontier
-                # pushes into the scan as an In predicate
-                reached = [r["path"] for r in contribs.select("path").collect()]
-                frontier_lits = sorted(set(reached) | set(seed_list))
-                n_frontier = len(frontier_lits)
+            # the next frontier is reached ∪ seeds; the reach probe also
+            # materializes the round's lazy checkpoint (which bounds plan
+            # depth, so no %8 depth guard is needed here). The seeds join
+            # on the driver: probing a union with a local relation
+            # measured 0.35-0.5 s vs 0.1 s for the plain probe.
+            contribs = iter_checkpoint_lazy(contribs, reliable)
+            reached, n_reached = keyset.probe(
+                contribs.select(F.col("path").alias("src")), "src", reliable=reliable
+            )
+            if isinstance(reached, list):
+                keys, n_keys = keyset.from_values(pairs, "src", set(reached) | set(seed_list))
             else:
-                frontier_lits = None
                 seed_df = pairs.sparkSession.createDataFrame(
                     [(s,) for s in seed_list], "src string"
                 )
-                frontier_df = (
-                    contribs.select(F.col("path").alias("src"))
-                    .unionByName(seed_df)
-                    .distinct()
-                )
+                keys, n_keys = reached.unionByName(seed_df), n_reached + n_seeds
     # support = contribution receivers ∪ seeds present in the graph
     # (a seed with no in-edges keeps its teleport mass: rank = reset).
-    # Seed-membership probes are literal isin pushdowns — tiny scans.
     seeds_in_graph = (
-        pairs.where(F.col("src").isin(seed_list)).select(F.col("src").alias("path"))
+        keyset.keep(pairs, "src", seed_keys, n_seeds).select(F.col("src").alias("path"))
         .unionAll(
-            pairs.where(F.col("dst").isin(seed_list)).select(F.col("dst").alias("path"))
+            keyset.keep(pairs, "dst", seed_keys, n_seeds).select(F.col("dst").alias("path"))
         )
         .distinct()
     )
-    part1 = contribs.select("path", rank_expr.alias("rank"))
+    part1 = flag_seeds(contribs).select("path", rank_expr.alias("rank"))
     part2 = (
         seeds_in_graph.join(contribs, "path", "left_anti")
         .withColumn("contrib", F.lit(None).cast("double"))
+        .withColumn("__seed", F.lit(True))
         .select("path", rank_expr.alias("rank"))
     )
     return part1.unionByName(part2).where(F.col("rank") > 0)

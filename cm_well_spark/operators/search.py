@@ -25,9 +25,10 @@ from pyspark.sql import functions as F
 
 from cm_well_spark.parsers.qp import FieldFilter, parse_qp
 from cm_well_spark.parsers.sort import DEFAULT_SORT, SortKey, parse_sort_by
+from cm_well_spark.plans import keyset
 from cm_well_spark.plans.bounds import export_path_bound
 from cm_well_spark.plans.compile import SYSTEM_COLUMNS, compile_filter
-from cm_well_spark.plans.iterative import iter_checkpoint, iter_checkpoint_count
+from cm_well_spark.plans.iterative import iter_checkpoint
 
 MAX_OFFSET = 1_000
 MAX_LENGTH = 10_000
@@ -149,21 +150,10 @@ def search(
                 # at sf1 for 8.9M docs vs ~2s broadcast). The cheapest
                 # proof is predicate_stats (r11): candidates are a subset
                 # of each filtered predicate's subjects, so a stats-derived
-                # upper bound under the cap licenses the broadcast hint
-                # with ZERO extra jobs. Only when stats can't prove it do
-                # we fall back to the r6 counted-checkpoint proof (one
-                # materialization + one narrow count) — same contract as
-                # traversal.py's frontier broadcasts.
-                from cm_well_spark.operators.traversal import BROADCAST_PATHS_MAX
-
-                if bound is not None and bound <= BROADCAST_PATHS_MAX:
-                    df = df.join(F.broadcast(paths), "path", "left_semi")
-                    proven_bound = bound
-                else:
-                    paths, n_paths = iter_checkpoint_count(paths)
-                    bounded = n_paths <= BROADCAST_PATHS_MAX
-                    df = df.join(F.broadcast(paths) if bounded else paths, "path", "left_semi")
-                    proven_bound = n_paths
+                # upper bound licenses the broadcast hint with ZERO extra
+                # jobs; without it the keyset proof counts a checkpoint.
+                paths, proven_bound = keyset.proven(paths, bound)
+                df = keyset.keep(df, "path", paths, proven_bound)
                 if residual is not None:
                     df = df.where(residual)
             else:

@@ -20,9 +20,11 @@ field values and infoton paths.
 Scale shape: every hop reads EDGES from the predicate-partitioned
 `triples` table — a narrow, partition-pruned scan (bound field names
 prune to their `p` partitions) with the bounded frontier broadcast —
-never a scan of the wide doc-table field maps. Per-level `[qp]` filters
-hydrate only the candidate target paths. The traversal bookkeeping is
-path sets; full infoton rows are fetched ONCE at the end via a semi join.
+never a scan of the wide doc-table field maps. Every broadcast decision
+is a plans/keyset.py route: a stats or carrier proof when one exists,
+else one counted checkpoint. Per-level `[qp]` filters hydrate only the
+candidate target paths. The traversal bookkeeping is path sets; full
+infoton rows are fetched ONCE at the end via a semi join.
 """
 
 from __future__ import annotations
@@ -42,22 +44,11 @@ from cm_well_spark.parsers.expansion import (
     parse_xg,
     parse_yg,
 )
+from cm_well_spark.plans import keyset
 from cm_well_spark.plans.bounds import proven_path_bound
 from cm_well_spark.plans.compile import compile_filter
-from cm_well_spark.plans.iterative import (
-    iter_checkpoint,
-    iter_checkpoint_count,
-    iter_checkpoint_lazy,
-)
 
 XG_LIMIT = 10_000  # webservice.xg.limit (application.conf:71)
-
-# broadcast-hint ceiling for PATH SETS (short strings, ~64B/row): 1M rows
-# ≈ the session's 64MB autoBroadcastJoinThreshold. Below it a counted set
-# broadcasts (hash-map semi join, no shuffle of the wide doc table);
-# above it the hint is withheld and AQE plans the join — the 100 TB
-# posture where a frontier can be billions of paths.
-BROADCAST_PATHS_MAX = 1_000_000
 
 
 def _target_filter(selectors: tuple[FilteredField, ...]) -> Column | None:
@@ -83,18 +74,16 @@ def _edges(triples: DataFrame, selectors, reverse: bool) -> DataFrame:
 
 
 def _filtered_paths(
-    infotons: DataFrame, paths: DataFrame, selectors, bounded: bool = False
+    infotons: DataFrame, paths: DataFrame, selectors, n_paths: int
 ) -> DataFrame:
     """Apply the per-level [qp] filter by hydrating ONLY the candidate
-    paths (semi join), returning the surviving path set. The broadcast
-    hint is applied only when the caller PROVED the candidate set small
-    (counted after materialization); otherwise AQE's runtime size check
-    picks the strategy — a blind hint here is a broadcast-OOM at 100 TB
-    (VERDICT r1 finding 4), a blind shuffle is a full exchange of the
-    wide doc table."""
+    paths (semi join), returning the surviving path set. `n_paths` is
+    the proven bound on the candidates: the keyset route broadcasts only
+    under its cap, otherwise AQE's runtime size check picks the strategy
+    — a blind hint here is a broadcast-OOM at 100 TB (VERDICT r1 finding
+    4), a blind shuffle is a full exchange of the wide doc table."""
     tf = _target_filter(selectors)
-    live = infotons.where(F.col("current"))
-    hydrated = live.join(F.broadcast(paths) if bounded else paths, "path", "left_semi")
+    hydrated = keyset.keep(infotons.where(F.col("current")), "path", paths, n_paths)
     if tf is not None:
         hydrated = hydrated.where(tf)
     return hydrated.select("path")
@@ -120,32 +109,23 @@ def _hop(
     infotons: DataFrame,
     triples: DataFrame,
     frontier_paths: DataFrame,
+    n_frontier: int,
     selectors,
     reverse: bool,
-    bounded: bool = False,
     stats: dict | None = None,
 ) -> DataFrame:
-    """One edge hop. `bounded=True` means the caller PROVED the frontier is
-    ≤ BROADCAST_PATHS_MAX paths (counted on an eagerly-checkpointed
-    frontier) — only then is a static broadcast hint safe at 100 TB;
-    otherwise AQE decides.
-    The hop TARGETS' boundedness is proven the cheapest way available:
-    from predicate_stats when the fields are named (no extra job at all),
+    """One edge hop from a frontier with proven bound `n_frontier`.
+    The hop TARGETS' bound is proven the cheapest way available: from
+    predicate_stats when the fields are named (no extra job at all),
     else by materializing + counting the target set — never assumed."""
-    edges = _edges(triples, selectors, reverse)
-    src = frontier_paths.select(F.col("path").alias("src")).distinct()
-    if bounded:
-        src = F.broadcast(src)
-    dsts = edges.join(src, "src", "left_semi").select(F.col("dst").alias("path")).distinct()
-    stat_bound = _stats_dst_bound(selectors, reverse, stats)
-    if stat_bound is not None:
-        dst_bounded = stat_bound <= BROADCAST_PATHS_MAX
-    else:
-        dsts, n_dsts = iter_checkpoint_count(dsts)
-        dst_bounded = n_dsts <= BROADCAST_PATHS_MAX
+    edges = keyset.keep(_edges(triples, selectors, reverse), "src", frontier_paths, n_frontier)
+    dsts, n_dsts = keyset.proven(
+        edges.select(F.col("dst").alias("path")).distinct(),
+        _stats_dst_bound(selectors, reverse, stats),
+    )
     # ghost skip (J7): only paths that exist as current infotons survive,
     # and the per-level filter applies to the hydrated targets
-    return _filtered_paths(infotons, dsts, selectors, bounded=dst_bounded)
+    return _filtered_paths(infotons, dsts, selectors, n_dsts)
 
 
 def _hydrate(infotons: DataFrame, paths: DataFrame, limit: int) -> DataFrame:
@@ -181,15 +161,10 @@ def expand_out(
     # bounded seed sets skip the eager materialize+count job entirely —
     # the lazy checkpoint's blocks ride the first consuming action. The
     # bound is strategy-only (broadcast licensing), never a row source.
-    seed_bound = proven_path_bound(seeds)
-    if seed_bound is not None and seed_bound <= BROADCAST_PATHS_MAX:
-        acc, n_frontier = iter_checkpoint_lazy(seeds.select("path")), seed_bound
-    else:
-        acc, n_frontier = iter_checkpoint_count(seeds.select("path"))
+    acc, n_frontier = keyset.proven(seeds.select("path"), proven_path_bound(seeds), checkpoint=True)
     frontier = acc
     for level in levels:
-        bounded = n_frontier <= BROADCAST_PATHS_MAX
-        targets = _hop(infotons, t, frontier, level.fields, reverse=False, bounded=bounded, stats=stats)
+        targets = _hop(infotons, t, frontier, n_frontier, level.fields, reverse=False, stats=stats)
         new = targets.join(acc, "path", "left_anti")
         # stats-proof elision of the per-level count job (r11, the same
         # discipline as search's path-set proof): the new frontier is a
@@ -204,11 +179,9 @@ def expand_out(
         # and REJECTED here: A/B at sf0.1 measured 3.24 s vs 1.71 s and
         # the same job count; under AQE each level's collect still runs
         # the same stage jobs the checkpoint would, plus py4j transfer.)
-        hop_bound = _stats_dst_bound(level.fields, False, stats)
-        if hop_bound is not None and hop_bound <= BROADCAST_PATHS_MAX:
-            frontier, n_frontier = iter_checkpoint_lazy(new), hop_bound
-        else:
-            frontier, n_frontier = iter_checkpoint_count(new)
+        frontier, n_frontier = keyset.proven(
+            new, _stats_dst_bound(level.fields, False, stats), checkpoint=True
+        )
         # acc itself is NOT re-checkpointed: it stays a flat union of
         # already-checkpointed frontiers, so its lineage is one node per
         # level (not exponential) and we skip a full materialization per
@@ -229,29 +202,24 @@ def expand_paths(
     keep the WHOLE discovered path (seeds + every intermediate + final)."""
     pe = parse_yg(yg) if isinstance(yg, str) else yg
     # seed-bound elision — same contract as expand_out
-    seed_bound = proven_path_bound(seeds)
-    if seed_bound is not None and seed_bound <= BROADCAST_PATHS_MAX:
-        seed_paths, n_seed = iter_checkpoint_lazy(seeds.select("path")), seed_bound
-    else:
-        seed_paths, n_seed = iter_checkpoint_count(seeds.select("path"))
+    seed_paths, n_seed = keyset.proven(
+        seeds.select("path"), proven_path_bound(seeds), checkpoint=True
+    )
     acc = seed_paths
     for path in pe.paths:
         # each |-alternative restarts from the seeds
         frontier, n_frontier = seed_paths, n_seed
         for seg in path.segments:
-            bounded = n_frontier <= BROADCAST_PATHS_MAX
             reverse = isinstance(seg, ExpandUp)
             hopped = _hop(
-                infotons, triples, frontier, seg.fields,
-                reverse=reverse, bounded=bounded, stats=stats,
+                infotons, triples, frontier, n_frontier, seg.fields,
+                reverse=reverse, stats=stats,
             )
             # stats-proof count elision, same contract as expand_out: the
             # hop result ⊆ the hop's stats-bounded target set
-            hop_bound = _stats_dst_bound(seg.fields, reverse, stats)
-            if hop_bound is not None and hop_bound <= BROADCAST_PATHS_MAX:
-                frontier, n_frontier = iter_checkpoint_lazy(hopped), hop_bound
-            else:
-                frontier, n_frontier = iter_checkpoint_count(hopped)
+            frontier, n_frontier = keyset.proven(
+                hopped, _stats_dst_bound(seg.fields, reverse, stats), checkpoint=True
+            )
             # flat union of checkpointed frontiers — no per-segment
             # re-materialization of the accumulator (see expand_out)
             acc = acc.unionByName(frontier)
@@ -322,9 +290,5 @@ def gqp_filter(
             bound = None
             break
         bound += b
-    if bound is not None and bound <= BROADCAST_PATHS_MAX:
-        return results.join(F.broadcast(survivors), "path", "left_semi")
-    survivors, n_survivors = iter_checkpoint_count(survivors)
-    if n_survivors <= BROADCAST_PATHS_MAX:
-        survivors = F.broadcast(survivors)
-    return results.join(survivors, "path", "left_semi")
+    survivors, n_survivors = keyset.proven(survivors, bound)
+    return keyset.keep(results, "path", survivors, n_survivors)

@@ -119,7 +119,11 @@ def materialized_view_sparql(spark, sf_dir):
 
     inf = _inf(spark, sf_dir)
     tri = _tri(spark, sf_dir)
-    dd = f"/root/repo/.checkpoints/registry_mv_{os.path.basename(os.path.normpath(sf_dir))}"
+    from cm_well_spark.model.lakehouse import REPO_ROOT
+
+    dd = os.path.join(
+        REPO_ROOT, ".checkpoints", f"registry_mv_{os.path.basename(os.path.normpath(sf_dir))}"
+    )
     shutil.rmtree(dd, ignore_errors=True)
     proc = SparqlTriggeredProcessor(
         spark, tri, "CONSTRUCT { ?n <locatedIn> ?r } WHERE { ?n <ofRegion> ?r }", dd

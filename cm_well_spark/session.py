@@ -12,8 +12,25 @@ import os
 from pyspark.sql import SparkSession
 
 
+#: heap ceiling: plenty for every measured op, including the sf1 clustering compact
+MAX_DRIVER_MEM_MB = 24 * 1024
+
+
+def default_driver_mem(meminfo: str = "/proc/meminfo") -> str:
+    """Driver heap sized from the host: min(24g, half of MemTotal), as a
+    JVM size string. The other half stays for Python workers, Arrow
+    buffers and the page cache. Hosts without /proc/meminfo get 24g."""
+    try:
+        with open(meminfo) as fh:
+            kb = next(int(line.split()[1]) for line in fh if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return f"{MAX_DRIVER_MEM_MB}m"
+    return f"{min(MAX_DRIVER_MEM_MB, kb // 2048)}m"
+
+
 def get_spark(app_name: str = "cm_well_spark", shuffle_partitions: int | None = None) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    heap = os.environ.get("CMW_DRIVER_MEM") or default_driver_mem()
     shuffle = shuffle_partitions or int(os.environ.get("CMW_SHUFFLE_PARTITIONS", cpus))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -24,7 +41,7 @@ def get_spark(app_name: str = "cm_well_spark", shuffle_partitions: int | None = 
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("CMW_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", heap)
         # pin the heap floor to the ceiling, and keep the heap RIGHT-SIZED
         # (r11): this VM faults anonymous memory at only ~120 MB/s
         # (measured: -XX:+AlwaysPreTouch of 48 GB = 391 s), so every NEW
@@ -32,16 +49,10 @@ def get_spark(app_name: str = "cm_well_spark", shuffle_partitions: int | None = 
         # 65-96% sys time and a 4-9x wall blowup on repeated sf1
         # iterative queries (pagerank 219-314 s vs 22-38 s once the heap
         # stopped wandering). -Xms pins the floor so G1 never uncommits
-        # and re-faults, and 24g (plenty for every measured op, including
-        # the sf1 clustering compact) bounds the one-time fault tax to
-        # ~3 min amortized over a session's first heavy queries. The
+        # and re-faults; the host-sized heap (default_driver_mem) bounds
+        # the one-time fault tax and always fits in physical memory. The
         # bench's min-of-N sampling absorbs that warm-up by design.
-        .config(
-            "spark.driver.extraJavaOptions",
-            os.environ.get(
-                "CMW_DRIVER_XOPTS", f"-Xms{os.environ.get('CMW_DRIVER_MEM', '24g')}"
-            ),
-        )
+        .config("spark.driver.extraJavaOptions", os.environ.get("CMW_DRIVER_XOPTS", f"-Xms{heap}"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # test tables store TIMESTAMP(NANOS); read as long, loaders convert

@@ -597,6 +597,20 @@ def test_lsh_topk_batch_fallback_guard(embs, spark):
     assert out[0]["vec_id"] == q["vec_id"] or any(r["vec_id"] == q["vec_id"] for r in out)
 
 
+@pytest.mark.parametrize("bad, width", [([1.0, 2.0, 3.0], "3"), (None, "null")])
+def test_lsh_topk_batch_dim_guard_names_width(spark, bad, width):
+    """A caller-passed dim fails fast on a query vector of another width
+    — and on a NULL vector — with the offending width in the message."""
+    from cm_well_spark.operators.similarity import lsh_topk_batch
+
+    corpus = spark.createDataFrame(
+        [(i, [float(i), 1.0, 0.0, 2.0]) for i in range(4)], "vec_id long, embedding array<double>"
+    )
+    queries = spark.createDataFrame([(0, bad)], "query_id long, embedding array<double>")
+    with pytest.raises(Exception, match=f"vector width {width} != dim=4"):
+        lsh_topk_batch(corpus, queries, k=1, n_planes=2, dim=4).collect()
+
+
 def test_chunk_documents_disjoint_and_overlap(spark):
     from cm_well_spark.operators.text import chunk_documents
 

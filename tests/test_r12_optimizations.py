@@ -3,9 +3,8 @@ round). Each pins a cache-hygiene or plan-shape promise the round's
 changes make, independent of the oracle matrix.
 
   pagerank / personalized_pagerank leave NO CacheManager entry behind:
-  their lazily-persisted round relations (edges+odeg, nodes) are freed
-  after the final iteration state is materialized inside the operator
-  (the _static_relation contract — VERDICT r11 item 1).
+  neither persists a round relation (edges, out-degrees) any more, so a
+  fresh identical plan must find no cached entry (VERDICT r11 item 1).
 """
 
 from __future__ import annotations
@@ -14,11 +13,11 @@ from pyspark.sql import functions as F
 
 
 def _rebuild_round_relations(triples):
-    """The exact plans the pagerank family persists (r12: the raw edge
-    relation and the out-degree relation — plain pagerank persists
-    nothing, personalized persists both and must free them).
-    CacheManager matches on analyzed-plan sameResult, so a fresh
-    identical plan finds any leaked entry."""
+    """The whole-graph edge and out-degree relations the pagerank family
+    once persisted (r12: neither pagerank nor the frontier-driven
+    personalized_pagerank persists anything now). CacheManager matches
+    on analyzed-plan sameResult, so a fresh identical plan finds any
+    leaked entry."""
     from cm_well_spark.operators.graph import DEFAULT_LINK_FIELDS, reference_edges
 
     edges = reference_edges(triples, DEFAULT_LINK_FIELDS)
@@ -140,18 +139,20 @@ def test_traversal_seed_count_elided(spark, sf_dir):
     )
     from cm_well_spark.operators import search as S
     from cm_well_spark.operators import traversal
+    from cm_well_spark.plans import keyset
 
     inf = load_infotons(spark, sf_dir)
     tri = load_triples(spark, sf_dir)
     st = load_predicate_stats(spark, sf_dir)
     calls = []
-    orig = traversal.iter_checkpoint_count
+    # every counted proof in the traversal goes through keyset.proven
+    orig = keyset.iter_checkpoint_count
 
     def spy(df, reliable=None):
         calls.append(1)
         return orig(df, reliable)
 
-    traversal.iter_checkpoint_count = spy
+    keyset.iter_checkpoint_count = spy
     try:
         seeds = S.search(inf, qp="rdfType::Customer,custkey<20", length=None, triples=tri, stats=st)
         bounded_rows = sorted(
@@ -169,4 +170,4 @@ def test_traversal_seed_count_elided(spark, sf_dir):
         assert len(calls) == 1, "carrier-less seeds must pay exactly the seed count"
         assert bounded_rows == fallback_rows and bounded_rows
     finally:
-        traversal.iter_checkpoint_count = orig
+        keyset.iter_checkpoint_count = orig

@@ -7,8 +7,6 @@ executed-plan string for the shapes that do not survive 100x scale:
   CartesianProduct          unkeyed all-pairs join
   BroadcastNestedLoopJoin   unkeyed join; legitimate ONLY when one side
                             is bounded by contract (whitelist below)
-  RoundRobinPartitioning    a blind repartition — legitimate only as the
-                            spread_for_cpu local-scan widener (whitelist)
 
 Emits one JSON object to stdout and exits non-zero if any non-whitelisted
 flag fires — the automated form of the per-round plan audit. Run:
